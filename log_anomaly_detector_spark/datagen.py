@@ -28,6 +28,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.session import local_frame
+
 VOCAB_SIZE = 48          # reference: 48 templates (HDFS.log_templates.csv)
 N_SOURCES = 12
 
@@ -206,7 +208,7 @@ def gen_reference_snapshot(spark: SparkSession, spec: GenSpec) -> DataFrame:
 def gen_allowed_sources(spark: SparkSession) -> DataFrame:
     """Referential dimension (F2) — tiny, always broadcast."""
     rows = [(f"source_{i:02d}", f"synthetic component {i}") for i in range(N_SOURCES)]
-    return spark.createDataFrame(rows, "source string, description string")
+    return local_frame(spark, rows, "source string, description string")
 
 
 def gen_baseline_profile(spark: SparkSession, spec: GenSpec, cfg) -> dict:

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from log_anomaly_detector_spark import RULE_VERSIONS
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG, RuleConfig
 from log_anomaly_detector_spark import storage
+from log_anomaly_detector_spark.session import local_frame
 from log_anomaly_detector_spark.rules.column_stats import stats_pass, stats_verdicts
 from log_anomaly_detector_spark.rules.drift import drift_verdicts
 from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
@@ -295,7 +296,8 @@ def run_validation(
         result.rule_verdicts.extend(batch_rule_rows)
 
         # persist verdicts (partitioned, idempotent like violations)
-        verd_df = spark.createDataFrame(
+        verd_df = local_frame(
+            spark,
             [
                 (
                     v["part_id"],

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.operators.text import _JACCARD_SQL
+from log_anomaly_detector_spark.session import local_frame
 
 
 def connected_components(
@@ -54,10 +55,15 @@ def connected_components(
     is within ``collect_budget`` rows, the components are resolved DRIVER-
     side with union-find over the collected edges — O(edges·α) work on a
     dim-sized list, the same driver-state pattern as template_induction's
-    dim — and returned as one createDataFrame with byte-identical (node,
-    min-reachable-id) semantics (pinned by the fast-vs-iterative parity
-    test). Larger graphs (the 100 TB regime) keep the distributed iterative
-    path below; ``collect_budget=0`` forces it.
+    dim — and returned as one Arrow local relation (``session.local_frame``)
+    with byte-identical (node, min-reachable-id) semantics (pinned by the
+    fast-vs-iterative parity test). Larger graphs (the 100 TB regime) keep
+    the distributed iterative path below; ``collect_budget=0`` forces it.
+
+    Both paths see the same edge table: ``node`` and ``component_id`` take
+    the wider of the ``src``/``dst`` types, and NULL is not a node — an edge
+    with one NULL endpoint keeps only its other endpoint (as a singleton
+    unless other edges join it), an edge with two is dropped.
 
     Iterative path: ONE Spark action per round — each node's OLD label rides
     through the grouped min as a second aggregate (own rows are tagged, and
@@ -76,7 +82,15 @@ def connected_components(
     # is two full executions of the (expensive) pair-generation plan inside
     # the edge checkpoint; cache it for the one action that builds edges,
     # then drop it (rounds only ever touch the checkpointed edge table)
-    pairs_c = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d")).persist()
+    # coalesce both ways: the common (wider) type of src/dst, and a NULL
+    # endpoint becomes a self-loop on the other one
+    pairs_c = (
+        pairs.select(
+            F.coalesce(src, dst).alias("s"), F.coalesce(dst, src).alias("d")
+        )
+        .filter(F.col("s").isNotNull())
+        .persist()
+    )
     if collect_budget and pairs_c.count() <= collect_budget:
         rows = pairs_c.collect()
         pairs_c.unpersist(blocking=False)
@@ -102,9 +116,9 @@ def connected_components(
                     ra, rb = rb, ra
                 parent[rb] = ra
         out = [(n, find(n)) for n in parent]
-        node_t = pairs.schema[src].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(
-            out, f"node {node_t}, component_id {node_t}"
+        node_t = pairs_c.schema["s"].dataType.simpleString()
+        return local_frame(
+            pairs.sparkSession, out, f"node {node_t}, component_id {node_t}"
         )
     edges = (
         pairs_c.unionByName(

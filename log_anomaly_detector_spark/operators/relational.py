@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from log_anomaly_detector_spark.session import local_frame
+
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -792,7 +794,7 @@ def _two_phase_rank(
     for pid in sorted(sizes):
         offsets.append((pid, acc))
         acc += sizes[pid]
-    off_df = ranged.sparkSession.createDataFrame(offsets, "_rpid int, _off long")
+    off_df = local_frame(ranged.sparkSession, offsets, "_rpid int, _off long")
     wloc = Window.partitionBy("_rpid").orderBy(*order)
     return (
         ranged.withColumn("_lrn", F.row_number().over(wloc))

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.operators.relational import t
+from log_anomaly_detector_spark.session import local_frame
 
 TOP_K = 5
 N_QUERIES = 5
@@ -126,7 +127,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Catalyst formulation (see _seq_fold), oracle untouched.
     qrows = {r["q_id"]: list(r["qv"]) for r in q.collect()}
     if not qrows:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     scored = emb.select("vec_id", "v").mapInPandas(
         _allpairs_score_udf(qrows), schema="q_id long, c_id long, cosine double"
     )
@@ -340,7 +341,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = _emb_dim(raw)
     if dim is None:  # empty corpus → empty result, contract schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     # query rows come straight off the scan (the vec_id predicate pushes to
     # parquet) and become driver/closure state; the corpus gets the
     # parallelizing repartition only when under-split (single-split testdata)
@@ -349,7 +350,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in raw.filter(F.col("vec_id") < N_QUERIES).collect()
     }
     if not qrows:  # no query-range ids → empty result, contract schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     par = spark.sparkContext.defaultParallelism
     emb = raw if raw.rdd.getNumPartitions() >= par else raw.repartition(par)
     # the whole search is ONE fused corpus pass (`_lsh_probe_score_udf`):
@@ -854,7 +855,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first(F.size("v"), ignorenulls=True).alias("d"),
     ).first()
     if probe is None or probe["d"] is None:  # empty corpus → contract schema
-        return spark.createDataFrame([], _PAIRS_SCHEMA)
+        return local_frame(spark, [], _PAIRS_SCHEMA)
     emb = raw.repartition(spark.sparkContext.defaultParallelism, "vec_id")
     return embedding_near_dup_pairs(emb, dim=probe["d"], n_rows=probe["n"])
 
@@ -892,7 +893,7 @@ def q_embedding_near_dup_production(spark: SparkSession, sf_dir: str) -> DataFra
     )
     dim = _emb_dim(raw)
     if dim is None:
-        return spark.createDataFrame([], _PAIRS_SCHEMA)
+        return local_frame(spark, [], _PAIRS_SCHEMA)
     emb = raw.repartition(spark.sparkContext.defaultParallelism, "vec_id")
     return embedding_near_dup_pairs(
         emb,
@@ -1462,7 +1463,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = _emb_dim(raw)
     if dim is None:  # empty corpus → empty result, contract schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     # single-split testdata: the Arrow kernels otherwise run in ONE task —
     # repartition ONLY when the source is under-split (fewer input splits
     # than cores). No downstream op needs a particular partitioning anymore
@@ -1485,7 +1486,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qrows = {r["q_id"]: list(r["qv"]) for r in q.collect()}
     if not qrows:  # corpus has no query-range ids → empty result, same schema
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     # the whole search tail is ONE fused corpus pass (`_probe_score_udf`):
     # c1 assignment, probe-list membership (probe lists computed driver-side
     # with the exact Catalyst arithmetic — `_probe_lists`, equivalence

@@ -34,8 +34,10 @@ a position survives iff ALL members agree), re-match, repeat until stable.
 Scale shape: the template dim is dim-sized (thousands) → broadcast joins;
 lines are scanned once per round and rounds are bounded by the deepest
 leaf's template count, not by row count; founder election and agreement are
-grouped aggregations. No Python in the loop; driver state is O(1) per round
-(a count and a small dim).
+grouped aggregations. No Python UDF in the loop. Driver state is the dim
+itself (bounded by ``max_dim_rows``), collected each round and handed back
+to Spark as an Arrow local relation (``session.local_frame``) — a
+``LocalTableScan`` read in the JVM, so no Python worker runs per round.
 """
 
 from __future__ import annotations
@@ -47,7 +49,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from log_anomaly_detector_spark.session import local_frame
+
 WILDCARD = "<*>"
+
+DIM_SCHEMA = "template_id long, tokens array<string>"
 
 _HAS_DIGIT = "[0-9]"
 
@@ -197,6 +203,18 @@ class InductionResult:
     metrics: dict = field(default_factory=dict)
 
 
+def _dim_df(spark, rows: list[tuple[int, list[str]]]) -> DataFrame:
+    """The template dim as a flat DataFrame, rebuilt every founding round
+    and refine pass. The dim lives driver-side between rounds (it is
+    dim-sized by definition — the reference holds the whole cluster list in
+    memory, Drain.py:286); an iterative plan that re-referenced the previous
+    round's DataFrame would double its logical tree every round and melt the
+    analyzer. Built as an Arrow local relation: the broadcast side of every
+    match join reads it in the JVM, where a pickled-RDD frame would re-run
+    Python tasks on every action."""
+    return local_frame(spark, rows, DIM_SCHEMA)
+
+
 def induce_templates(
     lines: DataFrame,
     st: float = 0.5,
@@ -247,16 +265,6 @@ def induce_templates(
             )
         return rows
 
-    DIM_SCHEMA = "template_id long, tokens array<string>"
-
-    def _dim_df(rows: list[tuple[int, list[str]]]) -> DataFrame:
-        # the dim lives driver-side between rounds (it is dim-sized by
-        # definition — the reference holds the whole cluster list in memory,
-        # Drain.py:286) and is re-created as a FLAT DataFrame each round:
-        # an iterative plan that re-references itself doubles its logical
-        # tree every round and melts the analyzer.
-        return spark.createDataFrame(rows, DIM_SCHEMA)
-
     # warm templates get NEGATIVE internal ids in dim order → they win the
     # pinned tie-break (asc id) like the reference's insertion-order scan,
     # and survive as "not new" in the output
@@ -293,7 +301,7 @@ def induce_templates(
             # 16M lines that copy dominated the round's wall)
             unmatched = remaining
         else:
-            m = _match(remaining, _dim_df(dim), st, depth)
+            m = _match(remaining, _dim_df(spark, dim), st, depth)
             unmatched = m.filter(F.col("template_id").isNull()).select(
                 "line_id", "tokens"
             ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -324,7 +332,7 @@ def induce_templates(
     passes = 0
     last_assign, last_dim = None, None
     while passes < max_refine_passes:
-        templates = _dim_df(dim)
+        templates = _dim_df(spark, dim)
         assign = tracked_persist(
             "induction_assign", _match(lines, templates, st, depth)
         )
@@ -387,7 +395,7 @@ def induce_templates(
             break
 
     # ---- final output: md5-8 ids + occurrences (outputResult semantics) ----
-    templates = _dim_df(dim)
+    templates = _dim_df(spark, dim)
     if last_assign is not None and sorted(last_dim) == sorted(dim):
         # converged pass matched against this exact dim (same ids AND
         # tokens; order is irrelevant — matching ties break by template_id)
@@ -407,9 +415,7 @@ def induce_templates(
         final_assign = last_assign.localCheckpoint(eager=False)
     else:
         final_assign = _match(lines, templates, st, depth)
-    warm_strings = spark.createDataFrame(
-        [(s,) for s in warm_strs], "template string"
-    )
+    warm_strings = local_frame(spark, [(s,) for s in warm_strs], "template string")
     tdim = templates.select(
         "template_id",
         F.array_join("tokens", " ").alias("template"),

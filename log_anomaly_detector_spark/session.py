@@ -3,13 +3,25 @@
 Local mode is a single JVM; on a real cluster the same config block applies
 unchanged except ``master`` (spark-submit supplies it). AQE is on so skewed
 shuffles re-plan at runtime; Arrow is on for the vectorized UDF path.
+
+Also home to ``local_frame``, the one way the package turns driver-held rows
+into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def default_driver_memory(host_bytes: int) -> str:
+    """Half the host's RAM in whole GiB (at least 1g). In local mode the
+    driver JVM is also the only executor, and the other half is left for the
+    Python workers, the OS and its page cache."""
+    return f"{max(1, host_bytes // 2 // 2**30)}g"
 
 
 def get_spark(
@@ -23,6 +35,8 @@ def get_spark(
     ``master`` default: ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` default: the local core count — the 200 default
     over-parallelizes small local runs and under-parallelizes big ones.
+    ``spark.driver.memory``: ``$SPARK_DRIVER_MEMORY``, else derived from host
+    RAM (``default_driver_memory``).
     """
     # cap BLAS threading in the Python workers BEFORE the JVM (and therefore
     # the workers) inherit this environment: task-level parallelism already
@@ -50,11 +64,22 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # local_frame tables above 1 MB become a JVM-side Arrow RDD instead
+        # of a LocalTableScan, whose per-action cost grows ~3x faster with
+        # rows (4 cores: 400k two-long rows, 2.1 s vs 0.8 s per aggregate;
+        # at the dedup fast path's 2M output rows, 6-7 s vs 1.3-2.2 s)
+        .config("spark.sql.execution.arrow.localRelationThreshold", "1MB")
         .config("spark.sql.parquet.compression.codec", "snappy")
         # idempotent per-partition rewrite (the engine's upsert analogue):
         # only partitions present in the written DataFrame are replaced.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -62,6 +87,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples in ``schema`` order;
+    ``schema`` is a DDL string), built as an Arrow local relation.
+
+    ``spark.createDataFrame(<list>, schema)`` pickles the rows into a Python
+    RDD (``Scan ExistingRDD``) that every action over the frame re-runs as
+    Python tasks: a cold Python worker start on first use, Python tasks on
+    every action after. An Arrow table is shipped to the JVM once and
+    planned as a ``LocalTableScan`` (a JVM-side Arrow RDD above
+    ``spark.sql.execution.arrow.localRelationThreshold``), whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. Schema (nullability
+    included) and values match the list path; naive datetimes are read as
+    local time, as the list path reads them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, TimestampType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    cols = []
+    for i, (field, arrow_field) in enumerate(zip(struct, arrow_schema)):
+        vals = [r[i] for r in rows]
+        if isinstance(field.dataType, TimestampType):
+            vals = [v if v is None else v.astimezone(timezone.utc) for v in vals]
+        cols.append(pa.array(vals, type=arrow_field.type))
+    table = pa.Table.from_arrays(cols, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)
 
 
 def quiesce(spark: SparkSession, timeout_s: float = 30.0) -> None:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from log_anomaly_detector_spark.functions.text_funcs import fingerprint
+from log_anomaly_detector_spark.session import local_frame
 
 DOC_STREAM_SCHEMA = "doc_id long, ts timestamp, text string"
 
@@ -132,7 +133,7 @@ def run_dedup_stream_once(
                 f"{out_dir!r} holds no data — resumed with a mismatched "
                 "out_dir?"
             ) from ex
-        return spark.createDataFrame([], "doc_id long, ts timestamp, fp string")
+        return local_frame(spark, [], "doc_id long, ts timestamp, fp string")
 
 
 _SWEEP_SCHEMA = "fp string, n_admitted long, keep_doc_id long, first_ts timestamp"
@@ -170,7 +171,7 @@ def sweep_sink_stragglers(spark: SparkSession, out_dir: str) -> DataFrame:
             "UNABLE_TO_INFER_SCHEMA",
             "_LEGACY_ERROR_TEMP_1134",
         ):
-            return spark.createDataFrame([], _SWEEP_SCHEMA)
+            return local_frame(spark, [], _SWEEP_SCHEMA)
         raise
     return (
         sink.groupBy("fp")

@@ -49,6 +49,7 @@ from log_anomaly_detector_spark.operators.text import (
 from log_anomaly_detector_spark.operators.text import (
     REP_TOP_PPM_MAX as TOP_PPM_MAX,
 )
+from log_anomaly_detector_spark.session import local_frame
 
 DOC_STREAM_SCHEMA = "doc_id long, ts timestamp, text string"
 
@@ -180,11 +181,13 @@ def run_quality_gate_once(
 
     The eval gram set is persisted for the drain so the static side is
     scanned once, not once per micro-batch. Both sinks are IDEMPOTENT
-    per batch (round 7, ADVICE r6): rows land under a ``_batch_id``
-    partition written with dynamic partition overwrite, so a batch retried
-    after a mid-write failure REPLACES its own partition instead of
-    double-appending — the returned kept rows are exact counts, not
-    at-least-once counts."""
+    per batch: rows land under a ``_batch_id`` partition written with
+    dynamic partition overwrite, so a batch retried after a mid-write
+    failure REPLACES its own partition instead of double-appending — the
+    returned kept rows are exact counts, not at-least-once counts. The mode
+    is set on each write, not left to the session: under the default
+    (static) session mode every batch would wipe the earlier batches'
+    partitions."""
     eval_grams = eval_grams.persist()
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
@@ -194,12 +197,13 @@ def run_quality_gate_once(
             .persist()
         )
         try:
-            gated.filter(F.col("keep")).drop("keep").write.mode(
-                "overwrite"
-            ).partitionBy("_batch_id").parquet(kept_dir)
-            gated.filter(~F.col("keep")).write.mode("overwrite").partitionBy(
-                "_batch_id"
-            ).parquet(quarantine_dir)
+            for rows, out in (
+                (gated.filter(F.col("keep")).drop("keep"), kept_dir),
+                (gated.filter(~F.col("keep")), quarantine_dir),
+            ):
+                rows.write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("_batch_id").parquet(out)
         finally:
             gated.unpersist()
 
@@ -232,7 +236,8 @@ def run_quality_gate_once(
         # else surfaces
         if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             raise
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "doc_id long, ts timestamp, n_3grams long, dup_3gram_ppm long,"
             " top_3gram_ppm long, n_5grams long, eval_hits long,"

@@ -67,3 +67,22 @@ def test_components_driver_fast_path_matches_iterative(spark):
     }
     assert fast == iterative
     assert (300, 300) in fast and (302, 300) in fast
+
+
+@pytest.mark.parametrize("collect_budget", [1_000_000, 0], ids=["driver", "iterative"])
+def test_components_null_ids_and_mixed_width(spark, collect_budget):
+    """NULL is not a node: an edge with one NULL endpoint keeps only its
+    other endpoint, an all-NULL edge vanishes. An ``int`` src with a
+    ``bigint`` dst beyond 2^31 types both output columns ``bigint``. Both
+    physical paths return the same rows and types."""
+    big = 2**33
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 5), (3, None), (None, None), (7, big), (2, big + 1)],
+        "doc_a int, doc_b bigint",
+    )
+    comp = connected_components(pairs, collect_budget=collect_budget)
+    assert [f.dataType.simpleString() for f in comp.schema] == ["bigint", "bigint"]
+    got = {(r["node"], r["component_id"]) for r in comp.collect()}
+    assert got == {
+        (1, 1), (2, 1), (big + 1, 1), (3, 3), (5, 5), (7, 7), (big, 7)
+    }

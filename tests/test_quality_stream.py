@@ -11,14 +11,14 @@ from log_anomaly_detector_spark.streaming.quality_stream import (
 )
 
 
-def _stream_input(spark, rows, d):
+def _stream_input(spark, rows, d, mode="overwrite"):
     spark.createDataFrame(rows, "doc_id long, text string").select(
         "doc_id",
         F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id")).alias(
             "ts"
         ),
         "text",
-    ).write.mode("overwrite").parquet(str(d))
+    ).write.mode(mode).parquet(str(d))
 
 
 def test_quality_stream_parity_routing_resume(spark, tmp_path):
@@ -157,6 +157,33 @@ def test_quality_stream_empty_drain_and_empty_eval(spark, tmp_path):
     assert [r["doc_id"] for r in rows] == [7]
     assert rows[0]["contaminated"] is False
     assert rows[0]["eval_hits"] == 0
+
+
+def test_quality_stream_keeps_every_batch_in_static_session(spark, tmp_path):
+    """The sinks set dynamic partition overwrite on each write: under the
+    session default (static), a second micro-batch must not wipe the first
+    batch's kept and quarantined partitions."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        eval_grams = build_eval_grams(
+            spark, spark.createDataFrame([], "doc_id long, text string")
+        )
+        dirs = [str(tmp_path / d) for d in ("in", "ckpt", "kept", "quarantine")]
+        clean = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
+        _stream_input(spark, [(1, clean), (2, "a b a b a b")], tmp_path / "in")
+        run_quality_gate_once(spark, dirs[0], eval_grams, *dirs[1:])
+        # a second file in the source dir → the resumed drain's batch 1
+        _stream_input(
+            spark, [(3, clean), (4, "c d c d c d")], tmp_path / "in", mode="append"
+        )
+        kept = run_quality_gate_once(spark, dirs[0], eval_grams, *dirs[1:])
+        assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
+        quarantine = spark.read.parquet(dirs[3]).collect()
+        assert sorted(r["doc_id"] for r in quarantine) == [2, 4]
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_rep_fold_matches_multiset_stats_property(spark):
