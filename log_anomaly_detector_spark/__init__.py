@@ -10,8 +10,9 @@ rows, and checkpoints per-partition completion so reruns resume.
 
 Everything is built on the public PySpark DataFrame/SQL API — Catalyst plans
 the physical execution; pandas/Arrow UDFs are used only where built-in
-expressions cannot express the semantics (token-array equality against a
-reference snapshot).
+expressions cannot express the semantics. The validation engine has none:
+even token-array equality against a reference snapshot, first mismatch
+included, is a built-in expression (``rules/token_equality.py``).
 """
 
 __version__ = "0.1.0"

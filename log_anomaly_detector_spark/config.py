@@ -12,7 +12,10 @@ Threshold semantics are pinned to the reference (SURVEY.md §2.9 R9):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+UNIQUENESS_MODES = ("salted", "direct")
+TOKEN_EQ_MODES = ("prefilter", "hash")
 
 
 @dataclass(frozen=True)
@@ -34,17 +37,20 @@ class RuleConfig:
     # salt buckets for the two-phase (salted partial -> final) dup count.
     uniqueness_salt_buckets: int = 16
     # 'salted': two-phase agg, safe on any layout/skew; 'direct': single
-    # groupBy(doc_id) — zero-shuffle when the input is bucketed by doc_id.
+    # groupBy(doc_id) — zero-shuffle when the input is bucketed by doc_id
+    # (the engine then fuses every row rule into one pass, rules/fused.py).
     uniqueness_mode: str = "salted"
 
     # --- token equality (R7) ----------------------------------------------
-    # 'prefilter': arrays shuffle once, equality decided JVM-side, Arrow UDF
-    #   on mismatches only — fastest when shuffle is local-disk (single node)
-    #   or storage is bucketed by doc_id (no shuffle at all).
+    # Used by the multi-branch ('salted') plan; the fused plan always
+    # prefilters. Either way the first mismatch is a Catalyst HOF
+    # (rules/token_equality.first_mismatch) run on mismatch candidates only.
+    # 'prefilter': arrays shuffle once, equality decided JVM-side — fastest
+    #   when shuffle is local-disk (single node) or storage is bucketed by
+    #   doc_id (no shuffle at all).
     # 'hash': join 16-byte xxhash64 signatures instead of arrays — trades two
     #   extra scans for ~10x less shuffle volume; wins when the shuffle
     #   crosses a network (large clusters, unbucketed storage).
-    # 'arrow': every joined row through the vectorized UDF (reference mode).
     token_eq_mode: str = "prefilter"
 
     # --- drift (R8) -------------------------------------------------------
@@ -79,6 +85,16 @@ class RuleConfig:
         "drift_ks",
         "drift_chi2",
     )
+
+    def __post_init__(self) -> None:
+        for name, allowed in (
+            ("uniqueness_mode", UNIQUENESS_MODES),
+            ("token_eq_mode", TOKEN_EQ_MODES),
+        ):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"{name}={getattr(self, name)!r}; allowed: {', '.join(allowed)}"
+                )
 
 
 DEFAULT_CONFIG = RuleConfig()

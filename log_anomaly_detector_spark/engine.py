@@ -2,18 +2,25 @@
 manifest checkpoint + lineage.
 
 One run executes a fixed number of jobs regardless of row count (the shape
-that survives 10^12 rows): one run-global duplicate-key job, then four jobs
-per checkpoint batch:
+that survives 10^12 rows): one run-global duplicate-key job, then per
+checkpoint batch:
 
 0. (once per run) duplicate keys over the full table — global PK semantics,
    so duplicates straddling checkpoint batches are caught;
 1. the single stats scan (partial+final hash agg → one tiny row/partition);
 2. the row-rule scan (column exprs + broadcast anti-join + salted-dedup
-   uniqueness + snapshot join with the Arrow equality UDF), written straight
-   to the violations table (no driver round-trip of row data);
+   uniqueness + snapshot join with the Catalyst first-mismatch expression),
+   written straight to the violations table (no driver round-trip of row
+   data, no Python worker, no cache);
 3. a tiny aggregate over the *written* violations (distinct violating docs
    per partition);
 4. the verdict/manifest commit (driver-side, O(partitions)).
+
+Spark counts more jobs than these steps: AQE submits every shuffle stage as
+a job of its own. Traced on an 8-partition, 4-bucket table in two batches
+(``uniqueness_mode='direct'``, local[4]), a run killed after one batch
+launches 17 jobs: 2 for the allowed-sources probe, 1 for the duplicate keys
+and 14 for the batch (stats, violations write, rollup, verdict write).
 
 Verdict semantics pinned to the reference (config.py): per-partition label is
 ``'Anomaly'`` iff round(score, 6) >= seq_threshold
@@ -69,21 +76,20 @@ def _row_rule_violations(
     allowed: DataFrame,
     cfg: RuleConfig,
     dups: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """(violations, cache_handle|None). On the co-located layout
-    (uniqueness_mode='direct') ALL row rules fuse into one zero-shuffle pass
-    (rules/fused.py); otherwise the layout-agnostic multi-branch plan.
-    ``dups`` is the run-global duplicate-key set (see run_validation)."""
+) -> DataFrame:
+    """On the co-located layout (uniqueness_mode='direct') ALL row rules fuse
+    into one zero-shuffle pass (rules/fused.py); otherwise the layout-agnostic
+    multi-branch plan. ``dups`` is the run-global duplicate-key set (see
+    run_validation)."""
     if cfg.uniqueness_mode == "direct":
         from log_anomaly_detector_spark.rules.fused import fused_row_violations
 
         return fused_row_violations(seqs, snapshot, allowed, dups)
-    viol = (
+    return (
         row_expr_violations(seqs, allowed)  # n_tok consistency + referential, 1 scan
         .unionByName(uniqueness_violations(seqs, cfg, dups))
         .unionByName(token_equality_violations(seqs, snapshot, cfg.token_eq_mode))
     )
-    return viol, None
 
 
 def run_validation(
@@ -176,16 +182,12 @@ def run_validation(
         def _violations_job():
             # job 2: row rules → violations table (delete+insert, idempotent)
             t = time.time()
-            viol, cache_handle = _row_rule_violations(
-                sub, snapshot, allowed, cfg, dups
-            )
+            viol = _row_rule_violations(sub, snapshot, allowed, cfg, dups)
             # violations are tiny — coalesce the writers so each partition
             # dir gets one file instead of one per upstream task
             storage.overwrite_partitions(
                 viol.repartition("part_id"), viol_path, batch
             )
-            if cache_handle is not None:
-                cache_handle.unpersist()
             job_secs["violations"] += time.time() - t
 
         from concurrent.futures import ThreadPoolExecutor

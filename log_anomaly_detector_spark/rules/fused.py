@@ -6,11 +6,12 @@ row-scope rule pack evaluates in ONE pass with ZERO shuffle:
 * the snapshot join is a storage-co-located sort-merge (no Exchange);
 * the join output stays partitioned+sorted on doc_id, so the uniqueness
   count is a `Window.partitionBy(doc_id)` with no Exchange and no extra sort;
-* n_tok consistency, referential (broadcast), NULL tokens, and the
-  token-equality *candidate* flag are column expressions in the same
-  projection, exploded into violation rows;
-* only the (tiny) token-equality candidate set is persisted and sent through
-  the Arrow first-mismatch UDF — the cache keeps the single big scan single.
+* n_tok consistency, referential (broadcast), NULL tokens and token
+  equality are column expressions in the same projection, exploded into
+  violation rows. The token-equality first mismatch is a Catalyst HOF
+  (`token_equality.first_mismatch`) computed in its own column and fed only
+  the candidate rows (`NOT tokens <=> ref_tokens`), so equal rows never run
+  it — no Python worker, no cache, one job.
 
 On a non-co-located layout this plan would shuffle full rows twice (window +
 join), so the engine only selects it when `uniqueness_mode == "direct"`;
@@ -23,11 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from log_anomaly_detector_spark.rules.token_equality import first_mismatch
-
-_CAND = "_token_eq_candidate"
+from log_anomaly_detector_spark.rules.token_equality import (
+    first_mismatch,
+    mismatch_detail,
+)
 
 
 def fused_row_violations(
@@ -35,9 +36,9 @@ def fused_row_violations(
     snapshot: DataFrame,
     allowed: DataFrame,
     dups: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (violations, cache_handle) — caller unpersists the handle
-    after materializing the violations.
+) -> DataFrame:
+    """The violation rows (part_id, doc_id, rule_id, observed, expected) of
+    every row-scope rule.
 
     ``dups`` (doc_id, dup_cnt), when given, is the duplicate-key set computed
     over the FULL table (engine job 0) so duplicates spanning checkpoint
@@ -65,6 +66,15 @@ def fused_row_violations(
             "left",
         )
     dup_cnt = F.col("_dup_cnt")
+    # token-equality candidates keep their tokens, every other row gets NULL,
+    # which short-circuits the first-mismatch HOF. Its own projection: inlined
+    # into first_mismatch, the array comparison would run once per reference.
+    cand = F.col("ref_tokens").isNotNull() & ~F.col("tokens").eqNullSafe(
+        F.col("ref_tokens")
+    )
+    joined = joined.withColumn("_cand_tokens", F.when(cand, F.col("tokens")))
+    joined = joined.withColumn("_mm", first_mismatch("_cand_tokens", "ref_tokens"))
+    mm_observed, mm_expected = mismatch_detail(F.col("_mm"))
 
     def v(cond, rule_id, observed, expected):
         return F.when(
@@ -101,44 +111,10 @@ def fused_row_violations(
             F.concat(F.lit("count="), dup_cnt.cast("string")),
             F.lit("count=1"),
         ),
-        v(
-            F.col("ref_tokens").isNotNull()
-            & ~F.col("tokens").eqNullSafe(F.col("ref_tokens")),
-            _CAND,
-            F.lit(""),
-            F.lit(""),
-        ),
+        v(F.col("_mm.idx") >= 0, "token_equality", mm_observed, mm_expected),
     )
-    fused = joined.select(
+    return joined.select(
         "part_id",
         "doc_id",
-        "tokens",
-        "ref_tokens",
         F.explode(F.filter(viols, lambda x: x.isNotNull())).alias("v"),
-    ).select("part_id", "doc_id", "tokens", "ref_tokens", "v.*")
-
-    # post-explode rows ≈ violations only — tiny at healthy violation rates;
-    # persist so the two union branches share the single big scan
-    fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
-
-    plain = fused.filter(F.col("rule_id") != _CAND).select(
-        "part_id", "doc_id", "rule_id", "observed", "expected"
-    )
-    tok = (
-        fused.filter(F.col("rule_id") == _CAND)
-        .withColumn("m", first_mismatch("tokens", "ref_tokens"))
-        .filter(F.col("m.idx") >= 0)
-        .select(
-            "part_id",
-            "doc_id",
-            F.lit("token_equality").alias("rule_id"),
-            F.concat(
-                F.lit("tokens["),
-                F.col("m.idx").cast("string"),
-                F.lit("]="),
-                F.col("m.obs").cast("string"),
-            ).alias("observed"),
-            F.concat(F.lit("ref="), F.col("m.exp").cast("string")).alias("expected"),
-        )
-    )
-    return plain.unionByName(tok), fused
+    ).select("part_id", "doc_id", "v.*")

@@ -1,25 +1,27 @@
-"""Property-based test: the vectorized first-mismatch kernel vs a plain
-Python reference, over arbitrary list pairs (Hypothesis)."""
+"""Property-based test: the Catalyst first-mismatch expression vs a plain
+Python reference, over arbitrary list pairs with NULL elements (Hypothesis).
+Each generated batch is one DataFrame evaluated with one collect."""
 
 from __future__ import annotations
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from log_anomaly_detector_spark.rules.token_equality import _first_mismatch_numpy
+from log_anomaly_detector_spark.rules.token_equality import first_mismatch
+from log_anomaly_detector_spark.session import local_frame
 
-pairs = st.lists(
-    st.tuples(
-        st.lists(st.integers(0, 5), max_size=8),
-        st.lists(st.integers(0, 5), max_size=8),
-    ),
-    min_size=1,
-    max_size=20,
+tokens = st.lists(st.one_of(st.none(), st.integers(0, 5)), max_size=8)
+pair = st.one_of(
+    st.tuples(tokens, tokens),
+    tokens.map(lambda a: (a, list(a))),  # equal arrays
+    st.tuples(tokens, tokens).map(lambda p: (p[0], p[0] + p[1])),  # prefix
 )
+batches = st.lists(pair, min_size=1, max_size=100)
 
 
-def _reference(a: list[int], b: list[int]) -> tuple[int, int, int]:
+def _reference(a: list, b: list) -> tuple:
+    """(idx, obs, exp): NULL equals NULL, a NULL element reads as None, a
+    slot past the end as -1; (-1, -1, -1) for equal arrays."""
     for i in range(min(len(a), len(b))):
         if a[i] != b[i]:
             return i, a[i], b[i]
@@ -29,20 +31,17 @@ def _reference(a: list[int], b: list[int]) -> tuple[int, int, int]:
     return -1, -1, -1
 
 
-def _to_buffers(lists):
-    offsets = np.zeros(len(lists) + 1, dtype=np.int64)
-    np.cumsum([len(x) for x in lists], out=offsets[1:])
-    values = np.array([v for x in lists for v in x], dtype=np.int32)
-    return values, offsets
-
-
-@settings(max_examples=300, deadline=None)
-@given(pairs)
-def test_first_mismatch_matches_reference(rows):
-    a_lists = [a for a, _ in rows]
-    b_lists = [b for _, b in rows]
-    av, ao = _to_buffers(a_lists)
-    bv, bo = _to_buffers(b_lists)
-    idx, obs, exp = _first_mismatch_numpy(av, ao, bv, bo)
+@settings(max_examples=20, deadline=None)
+@given(batches)
+def test_first_mismatch_matches_reference(spark, rows):
+    df = local_frame(
+        spark,
+        [(i, a, b) for i, (a, b) in enumerate(rows)],
+        "i int, a array<int>, b array<int>",
+    )
+    got = {
+        r["i"]: tuple(r["m"])
+        for r in df.select("i", first_mismatch("a", "b").alias("m")).collect()
+    }
     for i, (a, b) in enumerate(rows):
-        assert (idx[i], obs[i], exp[i]) == _reference(a, b), (i, a, b)
+        assert got[i] == _reference(a, b), (i, a, b)

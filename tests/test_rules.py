@@ -50,8 +50,9 @@ def test_uniqueness(spark):
     assert all(r["observed"] == "count=2" for r in got)
 
 
-def test_token_equality_udf_vs_sql(spark):
-    """The Arrow UDF must agree with the pure-SQL zip_with formulation."""
+def test_token_equality_first_mismatch_vs_sql(spark):
+    """Violation rendering on plain arrays, and first_mismatch's equality
+    decision agrees with SQL array equality."""
     rows = [
         ("eq", [1, 2, 3], 3, "s", 0),
         ("val_mismatch", [1, 9, 3], 3, "s", 0),
@@ -91,11 +92,11 @@ def test_token_equality_udf_vs_sql(spark):
             ~(F.col("tokens") == F.col("ref_tokens")),
         )
         .withColumn("m", first_mismatch("tokens", "ref_tokens"))
-        .select("doc_id", "sql_neq", (F.col("m.idx") >= 0).alias("udf_neq"))
+        .select("doc_id", "sql_neq", (F.col("m.idx") >= 0).alias("hof_neq"))
         .collect()
     )
     for r in sql_idx:
-        assert r["sql_neq"] == r["udf_neq"], r
+        assert r["sql_neq"] == r["hof_neq"], r
 
 
 def test_row_expr_combined_pass_equivalent(spark):
@@ -123,20 +124,28 @@ def test_row_expr_combined_pass_equivalent(spark):
 
 
 def test_token_equality_prefilter_equivalent(spark):
-    """JVM-prefiltered mode must equal the all-rows-through-Arrow mode."""
+    """The prefilter and hash modes emit the same violation rows, and their
+    violating docs are the golden implementation's."""
     from log_anomaly_detector_spark.datagen import (
         GenSpec,
         gen_reference_snapshot,
         gen_sequences,
     )
+    from log_anomaly_detector_spark.golden import golden_row_violations
 
     spec = GenSpec(n_docs=3_000, n_parts=4, seed=11)
     seqs = gen_sequences(spark, spec)
     snap = gen_reference_snapshot(spark, spec)
     hashm = {tuple(r) for r in token_equality_violations(seqs, snap, "hash").collect()}
     pre = {tuple(r) for r in token_equality_violations(seqs, snap, "prefilter").collect()}
-    arrow = {tuple(r) for r in token_equality_violations(seqs, snap, "arrow").collect()}
-    assert hashm == pre == arrow and hashm
+    gold = golden_row_violations(seqs.toPandas(), snap.toPandas(), set())
+    gold_eq = {
+        (r.part_id, r.doc_id)
+        for r in gold.itertuples(index=False)
+        if r.rule_id == "token_equality"
+    }
+    assert hashm == pre and hashm
+    assert {(r[0], r[1]) for r in pre} == gold_eq
 
 
 def test_null_tokens_row_rule_and_stats_pruning(spark):
@@ -289,9 +298,7 @@ def test_fused_pass_equals_multibranch(spark):
         .unionByName(token_equality_violations(seqs, snap, "prefilter"))
         .collect()
     }
-    fused, handle = fused_row_violations(seqs, snap, allowed)
-    got = {tuple(r) for r in fused.collect()}
-    handle.unpersist()
+    got = {tuple(r) for r in fused_row_violations(seqs, snap, allowed).collect()}
     assert got == multi and got
 
 
