@@ -14,9 +14,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-UNIQUENESS_MODES = ("salted", "direct")
-TOKEN_EQ_MODES = ("prefilter", "hash")
-
 
 @dataclass(frozen=True)
 class RuleConfig:
@@ -34,24 +31,10 @@ class RuleConfig:
     min_distinct_ratio: float = 0.95
 
     # --- uniqueness (R4) ------------------------------------------------
-    # salt buckets for the two-phase (salted partial -> final) dup count.
-    uniqueness_salt_buckets: int = 16
-    # 'salted': two-phase agg, safe on any layout/skew; 'direct': single
-    # groupBy(doc_id) — zero-shuffle when the input is bucketed by doc_id
-    # (the engine then fuses every row rule into one pass, rules/fused.py).
-    uniqueness_mode: str = "salted"
-
-    # --- token equality (R7) ----------------------------------------------
-    # Used by the multi-branch ('salted') plan; the fused plan always
-    # prefilters. Either way the first mismatch is a Catalyst HOF
-    # (rules/token_equality.first_mismatch) run on mismatch candidates only.
-    # 'prefilter': arrays shuffle once, equality decided JVM-side — fastest
-    #   when shuffle is local-disk (single node) or storage is bucketed by
-    #   doc_id (no shuffle at all).
-    # 'hash': join 16-byte xxhash64 signatures instead of arrays — trades two
-    #   extra scans for ~10x less shuffle volume; wins when the shuffle
-    #   crosses a network (large clusters, unbucketed storage).
-    token_eq_mode: str = "prefilter"
+    # One plan: a plain groupBy(doc_id) for the run-global duplicate keys and
+    # the fused row pass (rules/fused.py). 'direct' is the only value; the
+    # field stays so configs that name it keep working.
+    uniqueness_mode: str = "direct"
 
     # --- drift (R8) -------------------------------------------------------
     # fixed n_tok histogram bucket edges (pinned; width 16 up to 512).
@@ -87,14 +70,11 @@ class RuleConfig:
     )
 
     def __post_init__(self) -> None:
-        for name, allowed in (
-            ("uniqueness_mode", UNIQUENESS_MODES),
-            ("token_eq_mode", TOKEN_EQ_MODES),
-        ):
-            if getattr(self, name) not in allowed:
-                raise ValueError(
-                    f"{name}={getattr(self, name)!r}; allowed: {', '.join(allowed)}"
-                )
+        if self.uniqueness_mode != "direct":
+            raise ValueError(
+                f"uniqueness_mode={self.uniqueness_mode!r}; allowed: direct "
+                "(the salted multi-branch plan was removed)"
+            )
 
 
 DEFAULT_CONFIG = RuleConfig()

@@ -8,19 +8,20 @@ checkpoint batch:
 0. (once per run) duplicate keys over the full table — global PK semantics,
    so duplicates straddling checkpoint batches are caught;
 1. the single stats scan (partial+final hash agg → one tiny row/partition);
-2. the row-rule scan (column exprs + broadcast anti-join + salted-dedup
-   uniqueness + snapshot join with the Catalyst first-mismatch expression),
-   written straight to the violations table (no driver round-trip of row
-   data, no Python worker, no cache);
+2. the fused row-rule pass (``rules/fused.py``: snapshot join, broadcast
+   dimension join, uniqueness count and the Catalyst first-mismatch
+   expression in one projection, on every layout), written straight to the
+   violations table (no driver round-trip of row data, no Python worker, no
+   cache);
 3. a tiny aggregate over the *written* violations (distinct violating docs
    per partition);
 4. the verdict/manifest commit (driver-side, O(partitions)).
 
 Spark counts more jobs than these steps: AQE submits every shuffle stage as
 a job of its own. Traced on an 8-partition, 4-bucket table in two batches
-(``uniqueness_mode='direct'``, local[4]), a run killed after one batch
-launches 17 jobs: 2 for the allowed-sources probe, 1 for the duplicate keys
-and 14 for the batch (stats, violations write, rollup, verdict write).
+(local[4]), a run killed after one batch launches 17 jobs: 2 for the
+allowed-sources probe, 1 for the duplicate keys and 14 for the batch (stats,
+violations write, rollup, verdict write).
 
 Verdict semantics pinned to the reference (config.py): per-partition label is
 ``'Anomaly'`` iff round(score, 6) >= seq_threshold
@@ -45,12 +46,8 @@ from log_anomaly_detector_spark import storage
 from log_anomaly_detector_spark.session import local_frame
 from log_anomaly_detector_spark.rules.column_stats import stats_pass, stats_verdicts
 from log_anomaly_detector_spark.rules.drift import drift_verdicts
-from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
-from log_anomaly_detector_spark.rules.token_equality import token_equality_violations
-from log_anomaly_detector_spark.rules.uniqueness import (
-    duplicate_keys,
-    uniqueness_violations,
-)
+from log_anomaly_detector_spark.rules import fused
+from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 VERDICT_SCHEMA = (
     "part_id int, label string, score double, n_rows long, "
@@ -68,28 +65,6 @@ class ValidationResult:
     rule_verdicts: list[dict] = field(default_factory=list)  # per (part, rule)
     metrics: dict = field(default_factory=dict)
     out_dir: str = ""
-
-
-def _row_rule_violations(
-    seqs: DataFrame,
-    snapshot: DataFrame,
-    allowed: DataFrame,
-    cfg: RuleConfig,
-    dups: DataFrame | None = None,
-) -> DataFrame:
-    """On the co-located layout (uniqueness_mode='direct') ALL row rules fuse
-    into one zero-shuffle pass (rules/fused.py); otherwise the layout-agnostic
-    multi-branch plan. ``dups`` is the run-global duplicate-key set (see
-    run_validation)."""
-    if cfg.uniqueness_mode == "direct":
-        from log_anomaly_detector_spark.rules.fused import fused_row_violations
-
-        return fused_row_violations(seqs, snapshot, allowed, dups)
-    return (
-        row_expr_violations(seqs, allowed)  # n_tok consistency + referential, 1 scan
-        .unionByName(uniqueness_violations(seqs, cfg, dups))
-        .unionByName(token_equality_violations(seqs, snapshot, cfg.token_eq_mode))
-    )
 
 
 def run_validation(
@@ -156,7 +131,7 @@ def run_validation(
     )
     if batches and not single_full_batch:
         t_dup = time.time()
-        dups = duplicate_keys(seqs, cfg).persist()
+        dups = duplicate_keys(seqs).persist()
         n_dup_keys = dups.count()
         job_secs["dup_keys"] = time.time() - t_dup
 
@@ -182,7 +157,9 @@ def run_validation(
         def _violations_job():
             # job 2: row rules → violations table (delete+insert, idempotent)
             t = time.time()
-            viol = _row_rule_violations(sub, snapshot, allowed, cfg, dups)
+            # resolved on the module at call time, so a wrapper installed
+            # on rules.fused (a tracer) sees the call
+            viol = fused.fused_row_violations(sub, snapshot, allowed, dups)
             # violations are tiny — coalesce the writers so each partition
             # dir gets one file instead of one per upstream task
             storage.overwrite_partitions(

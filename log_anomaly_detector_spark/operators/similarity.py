@@ -89,24 +89,6 @@ def _norm_udf():
     return norm
 
 
-def _pair_dot_udf():
-    """Arrow kernel for candidate-pair dot products (near-dup verify):
-    sequential float64 fold of elementwise products, bit-identical to
-    Catalyst's `_dot(va, vb)` — both vectors ship per pair (pair-bounded
-    stream, never corpus²). Factory for the same call-time-parse reason as
-    `_norm_udf`."""
-
-    @F.pandas_udf("double")
-    def pdot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:  # np.stack raises on empty — guard the batch shape
-            return pd.Series([], dtype="float64")
-        A = np.stack(va.to_numpy())
-        B = np.stack(vb.to_numpy())
-        return pd.Series(_seq_fold(A * B))
-
-    return pdot
-
-
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for the first N_QUERIES vectors. All arithmetic
     on array<double> with a sequential fold — deterministic, oracle-safe.
@@ -486,7 +468,7 @@ def _grouped_verify_udf(
     not pair-sized): first-collision dedup — group (tbl, bucket) emits
     (i, j) iff tbl is the FIRST table where their full signatures agree,
     exactly-once across groups, no distinct shuffle — then the sequential-
-    fold cosine (same `_seq_fold` argument as `_norm_udf`/`_pair_dot_udf`:
+    fold cosine (same `_seq_fold` argument as `_norm_udf`:
     norms are sqrt(cumsum(C·C)), dots the sequential fold of the elementwise
     product, cosine dot/(na·nb) — the identical IEEE ops the pair-stream
     path evaluates), so both strategies produce byte-equal rows (pinned by
@@ -808,8 +790,8 @@ def embedding_near_dup_pairs(
         ),
         "id_b",
     )
-    # pair dot via the INLINE JVM fold (round 7): the r6 Arrow `_pair_dot_udf`
-    # here was the CLAUDE.md pair-stream trap — a pandas_udf over the
+    # pair dot via the INLINE JVM fold (round 7): an Arrow pair-dot UDF here
+    # was the CLAUDE.md pair-stream trap — a pandas_udf over the
     # candidate-PAIR stream ships both vectors per pair to Python workers,
     # exactly the transfer co-tenant load crushes (r6 verdict: 2.2 s → 5.9 s
     # on the contract regime). The fold evaluates the identical IEEE ops

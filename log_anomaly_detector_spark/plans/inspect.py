@@ -20,7 +20,9 @@ def plan_facts(df: DataFrame, execute: bool = False) -> dict[str, bool | int]:
     """Cheap structural facts about the physical plan.
 
     With AQE the codegen stages only appear in the *final* plan, so pass
-    ``execute=True`` when asserting on WholeStageCodegen spans.
+    ``execute=True`` when asserting on WholeStageCodegen spans. An executed
+    AQE plan prints the final tree and then the initial one; only the final
+    tree is counted.
     """
     import re
 
@@ -32,6 +34,9 @@ def plan_facts(df: DataFrame, execute: bool = False) -> dict[str, bool | int]:
     else:
         codegen = 0
     plan = formatted_plan(df)
+    head, initial, rest = plan.partition("== Initial Plan ==")
+    if initial:  # drop the initial tree, keep the node details after it
+        plan = head + rest[rest.find("\n\n") :]
     return {
         "pushed_filters": "PushedFilters: [" in plan
         and "PushedFilters: []" not in plan,

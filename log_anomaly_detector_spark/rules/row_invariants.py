@@ -1,17 +1,18 @@
-"""Row-scope invariants: n_tok consistency (R6) + referential integrity (R5).
+"""Row-scope invariants for the streaming validator: n_tok consistency (R6)
++ referential integrity (R5).
 
 Both are shuffle-free: the consistency check is a pure column expression, the
 referential check is a broadcast anti-join against the (tiny) allowed-sources
 dimension — reference semantics: unmapped EventId is skipped/flagged
 (``api/detect_anomaly_sequence.py:84-85``, ``logparser/Drain.py:367-377``).
+The engine evaluates the same two conditions inside its fused row pass
+(``rules/fused.py``); a test keeps the two in step.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-VIOLATION_COLS = ["part_id", "doc_id", "rule_id", "observed", "expected"]
 
 
 def ntok_consistency_violations(df: DataFrame) -> DataFrame:
@@ -28,58 +29,6 @@ def ntok_consistency_violations(df: DataFrame) -> DataFrame:
                 "expected"
             ),
         )
-    )
-
-
-def row_expr_violations(df: DataFrame, allowed: DataFrame) -> DataFrame:
-    """BOTH shuffle-free row rules in ONE scan: a broadcast left join marks
-    dimension membership, then an array-of-optional-structs is exploded into
-    violation rows. At 10^12 rows this halves the scan cost vs evaluating the
-    rules separately; output and semantics are identical to the individual
-    functions (asserted in tests)."""
-    marked = df.join(
-        F.broadcast(allowed.select("source", F.lit(True).alias("_in_dim"))),
-        "source",
-        "left",
-    )
-    ntok_v = F.when(
-        ~(F.col("n_tok") == F.size("tokens")),
-        F.struct(
-            F.lit("n_tok_consistency").alias("rule_id"),
-            F.concat(F.lit("n_tok="), F.col("n_tok").cast("string")).alias("observed"),
-            F.concat(F.lit("size(tokens)="), F.size("tokens").cast("string")).alias(
-                "expected"
-            ),
-        ),
-    )
-    # NULL tokens detected HERE (this scan reads the fat column anyway) so the
-    # stats scan never has to touch it — its null count feeds the null_rate
-    # verdict via the violations aggregate instead.
-    null_tok_v = F.when(
-        F.col("tokens").isNull(),
-        F.struct(
-            F.lit("null_tokens").alias("rule_id"),
-            F.lit("tokens=NULL").alias("observed"),
-            F.lit("non-null tokens").alias("expected"),
-        ),
-    )
-    ref_v = F.when(
-        F.col("source").isNotNull() & F.col("_in_dim").isNull(),
-        F.struct(
-            F.lit("referential").alias("rule_id"),
-            F.col("source").alias("observed"),
-            F.lit("member of allowed_sources").alias("expected"),
-        ),
-    )
-    return (
-        marked.select(
-            "part_id",
-            "doc_id",
-            F.explode(
-                F.filter(F.array(ntok_v, ref_v, null_tok_v), lambda v: v.isNotNull())
-            ).alias("v"),
-        )
-        .select("part_id", "doc_id", "v.rule_id", "v.observed", "v.expected")
     )
 
 

@@ -9,21 +9,18 @@ Equality is decided JVM-side (``tokens <=> ref_tokens``, codegen) and the
 first differing slot is located by one built-in higher-order function,
 ``array_position(zip_with(a, b, (x, y) -> x <=> y), false)``. No Python
 worker, no Arrow transfer: the engine's row rules run entirely in the JVM.
-The HOF is interpreted per element, so callers apply it to mismatch
-candidates only (the equality prefilter, or the hash-signature candidates).
+The HOF is interpreted per element, so the fused row pass
+(``rules/fused.py``) applies it to mismatch candidates only.
 
-The snapshot join itself is a big×big equi-join on ``doc_id``: at cluster
-scale both tables should be written bucketed/partitioned by ``doc_id`` so the
-join is storage-co-located; locally Catalyst plans a sort-merge join and AQE
-handles stragglers.
+The snapshot join (in the fused pass) is a big×big equi-join on ``doc_id``:
+with both tables bucketed by ``doc_id`` it is storage-co-located; on a plain
+layout Catalyst plans a sort-merge join and AQE handles stragglers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from log_anomaly_detector_spark.config import TOKEN_EQ_MODES
 
 
 def first_mismatch(a: Column | str, b: Column | str) -> Column:
@@ -67,69 +64,3 @@ def mismatch_detail(m: Column) -> tuple[Column, Column]:
         F.lit("tokens["), m["idx"].cast("string"), F.lit("]="), show(m["obs"])
     )
     return observed, F.concat(F.lit("ref="), show(m["exp"]))
-
-
-def token_signature(col: str) -> Column:
-    """xxhash64 of an int array that also separates NULL-element layouts:
-    Spark's array hash skips NULL elements, so ``[1, NULL]``, ``[NULL, 1]``
-    and ``[1]`` hash alike unless the NULL mask is hashed with them. The mask
-    is an interpreted HOF over every row: 2M rows of 40-60 tokens took 3.4 s
-    against 1.2 s for the bare hash (4 cores)."""
-    return F.xxhash64(F.col(col), F.transform(col, lambda x: x.isNull()))
-
-
-def token_equality_violations(
-    df: DataFrame, snapshot: DataFrame, mode: str = "hash"
-) -> DataFrame:
-    """Join sequences to the snapshot on doc_id and emit one violation row per
-    matched row whose token array differs (first mismatch index + values).
-
-    Unmatched rows are skipped, mirroring the reference's treatment of
-    unmapped events (``api/detect_anomaly_sequence.py:84-85``).
-
-    Modes (both agree — asserted in tests):
-
-    * ``"hash"`` (the 10^12-row shape): the equality decision joins 16-byte
-      ``token_signature`` hashes instead of shuffling the token arrays
-      themselves — the doc_id shuffle moves ~24 B/row rather than the full
-      payload. The (normally vanishing) mismatch set is then joined back to
-      both tables (AQE broadcasts it) and ``first_mismatch`` locates the
-      differing slot. Signature collisions masking a real mismatch have
-      probability ~2^-64 per row.
-    * ``"prefilter"``: arrays shuffle, equality decided JVM-side
-      (``NOT tokens <=> ref_tokens``) in codegen, ``first_mismatch`` on
-      mismatches only.
-    """
-    if mode not in TOKEN_EQ_MODES:
-        raise ValueError(f"token_eq_mode {mode!r} not in {TOKEN_EQ_MODES}")
-    if mode == "hash":
-        sig_a = df.select("doc_id", token_signature("tokens").alias("_ha"))
-        sig_b = snapshot.select("doc_id", token_signature("ref_tokens").alias("_hb"))
-        cand = (
-            sig_a.join(sig_b, "doc_id", "inner")
-            .filter(F.col("_ha") != F.col("_hb"))
-            .select("doc_id")
-        )
-        joined = (
-            df.select("part_id", "doc_id", "tokens")
-            .join(cand, "doc_id", "inner")  # tiny build side → AQE broadcast
-            .join(snapshot.select("doc_id", "ref_tokens"), "doc_id", "inner")
-        )
-    else:
-        joined = (
-            df.select("part_id", "doc_id", "tokens")
-            .join(snapshot.select("doc_id", "ref_tokens"), "doc_id", "inner")
-            .filter(~F.col("tokens").eqNullSafe(F.col("ref_tokens")))
-        )
-    observed, expected = mismatch_detail(F.col("m"))
-    return (
-        joined.withColumn("m", first_mismatch("tokens", "ref_tokens"))
-        .filter(F.col("m.idx") >= 0)
-        .select(
-            "part_id",
-            "doc_id",
-            F.lit("token_equality").alias("rule_id"),
-            observed.alias("observed"),
-            expected.alias("expected"),
-        )
-    )

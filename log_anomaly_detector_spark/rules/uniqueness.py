@@ -1,22 +1,17 @@
-"""Uniqueness on doc_id (R4) with explicit skew defusal.
+"""Uniqueness on doc_id (R4): the run-global duplicate-key set.
 
 Reference analogue: ``block_id`` is a PRIMARY KEY and collisions are handled
 by upsert-on-conflict (``database/migration/...init_schema.sql:12``,
-``database/upsert_log_block.py:24-29``). At 10^12 rows a naive
-``groupBy(doc_id)`` would send every copy of a pathologically hot key to one
-reducer, so the check is two-phase:
+``database/upsert_log_block.py:24-29``).
 
-1. **salted partial count** — ``groupBy(doc_id, salt)`` where the salt is the
-   input split id, so identical keys scattered across the table are first
-   collapsed *within* their split (map-side combine reduces each key to at
-   most one row per task before any shuffle; the salt keeps even a
-   billion-copy key spread over ``salt_buckets`` reducers);
-2. **final count** — ``groupBy(doc_id)`` over the already-collapsed partials
-   (≤ buckets rows per key), then ``filter(cnt > 1)``.
-
-The offending rows are then retrieved with a join against the (normally tiny)
-duplicate-key set; AQE picks a broadcast build side when it is small and a
-skew-split shuffle join when it is not.
+The count is a plain ``groupBy(doc_id)``. On the doc_id-bucketed layout
+Catalyst plans it with no Exchange; on a plain layout it is one hash
+exchange, and a hot key is no hazard there: the partial aggregate collapses
+each key to one row per task before the shuffle, so a reducer sees at most
+one row per input split for any key (a 200k-copy key is pinned in tests).
+The offending rows are attributed inside the fused row pass
+(``rules/fused.py``), which joins this set or, without it, counts over a
+``doc_id`` window.
 """
 
 from __future__ import annotations
@@ -24,55 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from log_anomaly_detector_spark.config import RuleConfig
 
-
-def duplicate_keys(df: DataFrame, cfg: RuleConfig) -> DataFrame:
-    """(doc_id, dup_cnt) for every doc_id appearing more than once.
-
-    ``direct`` mode is a plain groupBy — when the input table is bucketed by
-    doc_id Catalyst plans it with NO exchange at all; ``salted`` (default) is
-    the layout-agnostic two-phase variant described in the module docstring.
-    """
+def duplicate_keys(df: DataFrame) -> DataFrame:
+    """(doc_id, dup_cnt) for every doc_id appearing more than once."""
     # NULL doc_ids are a null-rate violation (R1), never "duplicates of each
     # other" — pinned; the golden pandas impl (value_counts dropna) agrees.
-    df = df.filter(F.col("doc_id").isNotNull())
-    if cfg.uniqueness_mode == "direct":
-        return (
-            df.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("dup_cnt"))
-            .filter(F.col("dup_cnt") > 1)
-        )
-    salt = F.pmod(F.spark_partition_id(), F.lit(cfg.uniqueness_salt_buckets)).alias(
-        "salt"
-    )
-    partial = df.select("doc_id", salt).groupBy("doc_id", "salt").count()
     return (
-        partial.groupBy("doc_id")
-        .agg(F.sum("count").alias("dup_cnt"))
+        df.filter(F.col("doc_id").isNotNull())
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("dup_cnt"))
         .filter(F.col("dup_cnt") > 1)
-    )
-
-
-def uniqueness_violations(
-    df: DataFrame, cfg: RuleConfig, dups: DataFrame | None = None
-) -> DataFrame:
-    """Violation rows: every physical row of ``df`` whose doc_id is
-    duplicated. ``dups`` may be precomputed over the FULL table (the engine
-    does, once per run) so duplicates straddling checkpoint batches — or a
-    done partition vs a resumed one — are still caught; the reference treats
-    block_id as a global PRIMARY KEY (init_schema.sql:12), not a per-batch
-    one. Without ``dups`` the scope is just ``df`` (standalone use)."""
-    if dups is None:
-        dups = duplicate_keys(df, cfg)
-    return (
-        df.select("part_id", "doc_id")
-        .join(dups, "doc_id", "inner")
-        .select(
-            "part_id",
-            "doc_id",
-            F.lit("uniqueness").alias("rule_id"),
-            F.concat(F.lit("count="), F.col("dup_cnt").cast("string")).alias("observed"),
-            F.lit("count=1").alias("expected"),
-        )
     )

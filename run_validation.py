@@ -120,10 +120,6 @@ def main() -> int:
                 spark, "snapshot", storage.SNAP_DDL,
                 os.path.join(d, "snapshot_bucketed"), n_buckets=args.n_buckets,
             )
-            # co-partitioned input → the zero-shuffle uniqueness variant
-            cfg = RuleConfig(
-                seq_threshold=cfg.seq_threshold, uniqueness_mode="direct"
-            )
         else:  # plain parquet layout
             seqs = spark.read.parquet(os.path.join(d, "sequences"))
             snap = spark.read.parquet(os.path.join(d, "snapshot"))

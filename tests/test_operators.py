@@ -71,6 +71,15 @@ def test_agg_is_codegen(spark):
     assert facts["partial_agg"]
 
 
+def test_plan_facts_counts_executed_exchanges_once(spark):
+    """An executed AQE plan prints its initial tree after the final one;
+    plan_facts counts the final tree only, so executing a query does not
+    double its exchange count."""
+    before = plan_facts(q_pricing_summary(spark, SF_DIR))["shuffle_exchanges"]
+    after = plan_facts(q_pricing_summary(spark, SF_DIR), execute=True)
+    assert before >= 1 and after["shuffle_exchanges"] == before
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_unpartitioned_window(spark, name):
     """No contract query may plan a zero-partition Window (Spark's own

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from log_anomaly_detector_spark.config import DEFAULT_CONFIG as CFG
@@ -11,13 +12,22 @@ from log_anomaly_detector_spark.rules.row_invariants import (
     ntok_consistency_violations,
     referential_violations,
 )
-from log_anomaly_detector_spark.rules.token_equality import (
-    first_mismatch,
-    token_equality_violations,
-)
-from log_anomaly_detector_spark.rules.uniqueness import uniqueness_violations
+from log_anomaly_detector_spark.rules.fused import fused_row_violations
+from log_anomaly_detector_spark.rules.token_equality import first_mismatch
+from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, part_id int"
+SNAP_SCHEMA = "doc_id string, ref_tokens array<int>"
+DIM_SCHEMA = "source string, description string"
+
+
+def _rule_rows(spark, df, rule_id, snap=None, dups=None):
+    """The fused row pass's violation rows of one rule; the dimension holds
+    the sources "s" and "ok", the snapshot is empty unless given."""
+    snap = snap if snap is not None else spark.createDataFrame([], SNAP_SCHEMA)
+    dim = spark.createDataFrame([("s", "d"), ("ok", "d")], DIM_SCHEMA)
+    viol = fused_row_violations(df, snap, dim, dups)
+    return viol.filter(F.col("rule_id") == rule_id)
 
 
 def test_ntok_consistency(spark):
@@ -45,9 +55,10 @@ def test_uniqueness(spark):
         [("a", [1], 1, "s", 0), ("a", [1], 1, "s", 1), ("b", [1], 1, "s", 0)],
         SEQ_SCHEMA,
     )
-    got = uniqueness_violations(df, CFG).collect()
-    assert sorted((r["doc_id"], r["part_id"]) for r in got) == [("a", 0), ("a", 1)]
-    assert all(r["observed"] == "count=2" for r in got)
+    for dups in (None, duplicate_keys(df)):
+        got = _rule_rows(spark, df, "uniqueness", dups=dups).collect()
+        assert sorted((r["doc_id"], r["part_id"]) for r in got) == [("a", 0), ("a", 1)]
+        assert all(r["observed"] == "count=2" for r in got)
 
 
 def test_token_equality_first_mismatch_vs_sql(spark):
@@ -71,11 +82,11 @@ def test_token_equality_first_mismatch_vs_sql(spark):
         ("not_in_seqs", [7]),
     ]
     df = spark.createDataFrame(rows, SEQ_SCHEMA)
-    snap = spark.createDataFrame(snap_rows, "doc_id string, ref_tokens array<int>")
+    snap = spark.createDataFrame(snap_rows, SNAP_SCHEMA)
 
     got = {
         r["doc_id"]: (r["observed"], r["expected"])
-        for r in token_equality_violations(df, snap).collect()
+        for r in _rule_rows(spark, df, "token_equality", snap=snap).collect()
     }
     assert set(got) == {"val_mismatch", "a_longer", "b_longer", "first_tok", "empty_vs"}
     assert got["val_mismatch"] == ("tokens[1]=9", "ref=2")
@@ -100,19 +111,24 @@ def test_token_equality_first_mismatch_vs_sql(spark):
 
 
 def test_row_expr_combined_pass_equivalent(spark):
-    """The single-scan combined pass must equal the two individual rules."""
+    """The fused pass's n_tok_consistency and referential rows equal the two
+    stand-alone rules the streaming validator runs, so the stream and the
+    engine judge a row alike."""
     from log_anomaly_detector_spark.datagen import (
         GenSpec,
         gen_allowed_sources,
+        gen_reference_snapshot,
         gen_sequences,
     )
-    from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
 
     spec = GenSpec(n_docs=3_000, n_parts=4, seed=11)
     seqs = gen_sequences(spark, spec)
     allowed = gen_allowed_sources(spark)
-    combined = {
-        tuple(r) for r in row_expr_violations(seqs, allowed).collect()
+    fused = {
+        tuple(r)
+        for r in fused_row_violations(seqs, gen_reference_snapshot(spark, spec), allowed)
+        .filter(F.col("rule_id").isin("n_tok_consistency", "referential"))
+        .collect()
     }
     separate = {
         tuple(r)
@@ -120,32 +136,8 @@ def test_row_expr_combined_pass_equivalent(spark):
         .unionByName(referential_violations(seqs, allowed))
         .collect()
     }
-    assert combined == separate and combined
-
-
-def test_token_equality_prefilter_equivalent(spark):
-    """The prefilter and hash modes emit the same violation rows, and their
-    violating docs are the golden implementation's."""
-    from log_anomaly_detector_spark.datagen import (
-        GenSpec,
-        gen_reference_snapshot,
-        gen_sequences,
-    )
-    from log_anomaly_detector_spark.golden import golden_row_violations
-
-    spec = GenSpec(n_docs=3_000, n_parts=4, seed=11)
-    seqs = gen_sequences(spark, spec)
-    snap = gen_reference_snapshot(spark, spec)
-    hashm = {tuple(r) for r in token_equality_violations(seqs, snap, "hash").collect()}
-    pre = {tuple(r) for r in token_equality_violations(seqs, snap, "prefilter").collect()}
-    gold = golden_row_violations(seqs.toPandas(), snap.toPandas(), set())
-    gold_eq = {
-        (r.part_id, r.doc_id)
-        for r in gold.itertuples(index=False)
-        if r.rule_id == "token_equality"
-    }
-    assert hashm == pre and hashm
-    assert {(r[0], r[1]) for r in pre} == gold_eq
+    assert {r[2] for r in fused} == {"n_tok_consistency", "referential"}
+    assert fused == separate
 
 
 def test_null_tokens_row_rule_and_stats_pruning(spark):
@@ -154,14 +146,15 @@ def test_null_tokens_row_rule_and_stats_pruning(spark):
     import tempfile
 
     from log_anomaly_detector_spark.rules.column_stats import stats_pass
-    from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
     from log_anomaly_detector_spark.plans import formatted_plan
 
     df = spark.createDataFrame(
         [("a", None, 1, "ok", 0), ("b", [1], 1, "ok", 0)], SEQ_SCHEMA
     )
-    dim = spark.createDataFrame([("ok", "d")], "source string, description string")
-    got = {(r["doc_id"], r["rule_id"]) for r in row_expr_violations(df, dim).collect()}
+    snap = spark.createDataFrame([("a", [1]), ("b", [1])], SNAP_SCHEMA)
+    dim = spark.createDataFrame([("ok", "d")], DIM_SCHEMA)
+    viol = fused_row_violations(df, snap, dim)
+    got = {(r["doc_id"], r["rule_id"]) for r in viol.collect()}
     assert got == {("a", "null_tokens")}
 
     # pruning must survive a real parquet scan
@@ -196,15 +189,15 @@ def test_uniqueness_ignores_null_doc_ids(spark):
         [(None, [1], 1, "s", 0), (None, [2], 1, "s", 0), ("a", [1], 1, "s", 0)],
         SEQ_SCHEMA,
     )
-    assert uniqueness_violations(df, CFG).count() == 0
+    for dups in (None, duplicate_keys(df)):
+        assert _rule_rows(spark, df, "uniqueness", dups=dups).count() == 0
 
 
 def test_uniqueness_pathological_skew(spark):
-    """One doc_id duplicated 200k times must not break the salted two-phase
-    check — the partial agg collapses copies before the key-shuffle, so no
-    single reducer sees the raw duplicates."""
-    from pyspark.sql import functions as F
-
+    """One doc_id duplicated 200k times is flagged on every copy, through
+    both uniqueness branches of the fused pass: the doc_id window (all copies
+    in one window partition) and the join to ``duplicate_keys``, whose
+    partial aggregate collapses the copies before the key shuffle."""
     hot = spark.range(200_000).select(
         F.lit("blk_hot").alias("doc_id"),
         F.array(F.lit(1)).alias("tokens"),
@@ -220,19 +213,22 @@ def test_uniqueness_pathological_skew(spark):
         F.lit(0).cast("int").alias("part_id"),
     )
     df = hot.unionByName(cold)
-    viol = uniqueness_violations(df, CFG)
-    assert viol.count() == 200_000
-    assert viol.select("doc_id").distinct().count() == 1
-    one = viol.first()
-    assert one["observed"] == "count=200000"
+    for dups in (None, duplicate_keys(df)):
+        viol = _rule_rows(spark, df, "uniqueness", dups=dups)
+        assert viol.count() == 200_000
+        assert viol.select("doc_id").distinct().count() == 1
+        assert viol.first()["observed"] == "count=200000"
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """The engine's key layout claim: doc_id-bucketed tables join with ZERO
-    Exchange (regression guard for the storage-co-located join)."""
+    """The engine's key layout claim: on doc_id-bucketed tables the fused row
+    pass (with and without the duplicate-key join) and the duplicate-key
+    count run with ZERO Exchange (regression guard for the storage-co-located
+    join)."""
     from log_anomaly_detector_spark import storage
     from log_anomaly_detector_spark.datagen import (
         GenSpec,
+        gen_allowed_sources,
         gen_reference_snapshot,
         gen_sequences,
     )
@@ -258,48 +254,53 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = token_equality_violations(seqs, snap, "prefilter")
-        facts = plan_facts(joined)
-        assert facts["sort_merge_join"]
-        assert facts["shuffle_exchanges"] == 0, "bucketed join must not shuffle"
-        assert joined.count() > 0  # planted edits found
-
-        # direct-mode uniqueness on the bucketed table is also shuffle-free
-        from log_anomaly_detector_spark.config import RuleConfig
-        from log_anomaly_detector_spark.rules.uniqueness import duplicate_keys
-
-        dk = duplicate_keys(seqs, RuleConfig(uniqueness_mode="direct"))
+        dk = duplicate_keys(seqs)
         assert plan_facts(dk)["shuffle_exchanges"] == 0
+        allowed = gen_allowed_sources(spark)
+        for dups in (None, dk):
+            viol = fused_row_violations(seqs, snap, allowed, dups)
+            facts = plan_facts(viol)
+            assert facts["sort_merge_join"]
+            assert facts["shuffle_exchanges"] == 0, "bucketed join must not shuffle"
+            # planted edits and duplicates found
+            got = {r["rule_id"] for r in viol.select("rule_id").distinct().collect()}
+            assert {"token_equality", "uniqueness"} <= got, got
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_fused_pass_equals_multibranch(spark):
-    """The zero-shuffle fused row pass must produce exactly the multi-branch
-    plan's violation set on planted data."""
+@pytest.mark.parametrize("with_dups", [False, True], ids=["window", "dups"])
+def test_fused_pass_equals_golden(spark, with_dups):
+    """The fused row pass produces exactly the golden violation set on
+    planted data, through either uniqueness branch: the doc_id window
+    (no ``dups``) and the join to a precomputed ``duplicate_keys``."""
     from log_anomaly_detector_spark.datagen import (
         GenSpec,
         gen_allowed_sources,
         gen_reference_snapshot,
         gen_sequences,
     )
-    from log_anomaly_detector_spark.rules.fused import fused_row_violations
-    from log_anomaly_detector_spark.rules.row_invariants import row_expr_violations
+    from log_anomaly_detector_spark.golden import golden_row_violations
 
     spec = GenSpec(n_docs=4_000, n_parts=4, seed=13)
     seqs = gen_sequences(spark, spec).cache()
     snap = gen_reference_snapshot(spark, spec)
     allowed = gen_allowed_sources(spark)
 
-    multi = {
-        tuple(r)
-        for r in row_expr_violations(seqs, allowed)
-        .unionByName(uniqueness_violations(seqs, CFG))
-        .unionByName(token_equality_violations(seqs, snap, "prefilter"))
-        .collect()
+    dups = duplicate_keys(seqs) if with_dups else None
+    got = {
+        (r["part_id"], r["doc_id"], r["rule_id"])
+        for r in fused_row_violations(seqs, snap, allowed, dups).collect()
     }
-    got = {tuple(r) for r in fused_row_violations(seqs, snap, allowed).collect()}
-    assert got == multi and got
+    gold = golden_row_violations(
+        seqs.toPandas(),
+        snap.toPandas(),
+        {r["source"] for r in allowed.collect()},
+    )
+    seqs.unpersist()
+    # the generator plants every row rule but NULL tokens
+    assert {r[2] for r in got} == set(CFG.row_rules) - {"null_tokens"}
+    assert got == set(map(tuple, gold[["part_id", "doc_id", "rule_id"]].values))
 
 
 def test_drift_stats_math():

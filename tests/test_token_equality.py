@@ -1,6 +1,6 @@
-"""Token-array equality (R7) on both engine row-rule plans: NULL array
-elements, the mode strings ``RuleConfig`` accepts, and a plan guard that
-keeps Python workers and the cache out of the violations job."""
+"""Token-array equality (R7) on the engine's row-rule plan: NULL array
+elements, the settings ``RuleConfig`` rejects, and a plan guard that keeps
+Python workers and the cache out of the violations job."""
 
 from __future__ import annotations
 
@@ -16,17 +16,13 @@ from log_anomaly_detector_spark.datagen import (
     gen_reference_snapshot,
     gen_sequences,
 )
-from log_anomaly_detector_spark.engine import _row_rule_violations
 from log_anomaly_detector_spark.golden import golden_row_violations
+from log_anomaly_detector_spark.rules import fused
 
 RULES = Path(__file__).resolve().parents[1] / "log_anomaly_detector_spark" / "rules"
 
-# the engine's two row-rule plans: fused (direct) and multi-branch (salted)
-PLANS = {
-    "fused": RuleConfig(uniqueness_mode="direct"),
-    "prefilter": RuleConfig(uniqueness_mode="salted", token_eq_mode="prefilter"),
-    "hash": RuleConfig(uniqueness_mode="salted", token_eq_mode="hash"),
-}
+# the engine's row-rule plans (one: the fused pass)
+PLANS = {"fused": fused.fused_row_violations}
 
 # doc_id -> (tokens, ref_tokens, expected (observed, expected) or None)
 NULL_CASES = {
@@ -69,10 +65,10 @@ def null_world(spark):
 @pytest.mark.parametrize("plan", sorted(PLANS))
 def test_first_mismatch_with_null_elements(spark, null_world, plan):
     """NULL elements compare equal to NULL elements; a NULL element prints as
-    ``NULL`` and a slot past the end as ``-1``; every plan agrees with the
+    ``NULL`` and a slot past the end as ``-1``; the plan agrees with the
     golden violation set."""
     seqs, snap, allowed, gold = null_world
-    rows = _row_rule_violations(seqs, snap, allowed, PLANS[plan]).collect()
+    rows = PLANS[plan](seqs, snap, allowed).collect()
     got = {
         r["doc_id"]: (r["observed"], r["expected"])
         for r in rows
@@ -84,32 +80,33 @@ def test_first_mismatch_with_null_elements(spark, null_world, plan):
 
 
 @pytest.mark.parametrize(
-    "kwargs",
+    "kwargs, error",
     [
-        {"token_eq_mode": "arrow"},  # removed mode
-        {"token_eq_mode": "Prefilter"},
-        {"uniqueness_mode": "salt"},
+        ({"token_eq_mode": "arrow"}, TypeError),  # the field itself is gone
+        ({"token_eq_mode": "Prefilter"}, TypeError),
+        ({"uniqueness_mode": "salt"}, ValueError),
+        ({"uniqueness_mode": "salted"}, ValueError),  # removed plan
     ],
-    ids=["removed_arrow", "token_eq_case", "uniqueness_typo"],
+    ids=["removed_arrow", "token_eq_case", "uniqueness_typo", "removed_salted"],
 )
-def test_rule_config_rejects_unknown_modes(kwargs):
+def test_rule_config_rejects_unknown_modes(kwargs, error):
     (name, value), = kwargs.items()
-    with pytest.raises(ValueError, match=name) as err:
+    with pytest.raises(error, match=name) as err:
         RuleConfig(**kwargs)
-    assert repr(value) in str(err.value)
-    RuleConfig(uniqueness_mode="direct", token_eq_mode="hash")  # allowed values
+    if error is ValueError:
+        assert repr(value) in str(err.value) and "removed" in str(err.value)
+    assert RuleConfig(uniqueness_mode="direct") == RuleConfig()  # the one value
 
 
 @pytest.mark.parametrize("plan", sorted(PLANS))
 def test_violations_plan_has_no_python_and_no_cache(spark, plan):
     """The executed violations plan holds no Python evaluation node and no
-    cached relation, on both row-rule plans (the inputs are not cached)."""
+    cached relation (the inputs are not cached)."""
     spec = GenSpec(n_docs=2_000, n_parts=2, seed=3)
-    viol = _row_rule_violations(
+    viol = PLANS[plan](
         gen_sequences(spark, spec),
         gen_reference_snapshot(spark, spec),
         gen_allowed_sources(spark),
-        PLANS[plan],
     )
     assert viol.filter(viol.rule_id == "token_equality").count() > 0
     viol.collect()
